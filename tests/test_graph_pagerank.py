@@ -48,3 +48,5 @@ def test_star_graph_matches_python_mirror(spark):
 def test_dangling_free_directed_graph_matches_mirror(spark):
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (3, 2), (2, 1)]
     assert _run(spark, edges, 4) == _mirror(edges, 4)
+    # a NULL-src edge carries no rank in any iteration
+    assert _run(spark, edges + [(None, 1)], 4) == _mirror(edges, 4)

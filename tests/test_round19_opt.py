@@ -16,7 +16,7 @@
    the self-join forms they replaced.
 4. ``ensure_min_parallelism`` leaves shuffle-containing plans alone
    (ADVICE r18: probing them via ``df.rdd`` executed upstream stages at
-   plan-construction time).
+   plan-construction time), and detects them by plan node, not by name.
 """
 
 from __future__ import annotations
@@ -188,3 +188,11 @@ def test_ensure_min_parallelism_skips_shuffled_input(spark):
     assert _scan_partitions(shuffled) is None
     # ...and the floor must hand such plans back untouched
     assert ensure_min_parallelism(shuffled) is shuffled
+
+
+def test_scan_partitions_ignores_exchange_named_columns(spark):
+    from transit_efficiency_analysis_spark.operators.parallel import _scan_partitions
+
+    # only plan nodes count as exchanges, not a column named like one
+    scan = spark.range(100).withColumn("Exchange_rate", F.lit(1.0))
+    assert _scan_partitions(scan) == scan.rdd.getNumPartitions()

@@ -1,11 +1,12 @@
 """Local mirror of the driver's t2 correctness gate.
 
 Runs every registered demo query on Spark and its DuckDB oracle twin on the
-same parquet tables, then compares row count, column names, and an
+same parquet tables, then compares row count, column names, dtypes and an
 order-insensitive value comparison. Exact equality is required for
 ints/strings/timestamps; floats are compared exactly first and reported if
 they only match within 1e-9 relative tolerance (the driver may hash exact
-values — queries should be designed to be bit-equal).
+values — queries should be designed to be bit-equal). ``check_demo`` is the
+per-demo check; ``tests/test_demo_oracle.py`` runs it for every demo.
 
 Usage:
     python tools/verify_local.py [sf_dir] [query ...]
@@ -21,9 +22,11 @@ from datetime import date, datetime
 from decimal import Decimal
 
 import duckdb
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from transit_efficiency_analysis_spark.demo import Demo
 from transit_efficiency_analysis_spark.sources.registry import TESTDATA_TABLES
 
 
@@ -128,6 +131,28 @@ def type_report(spark_df, duck_cols, duck_types) -> list[str]:
     return out
 
 
+def check_demo(
+    con: duckdb.DuckDBPyConnection, d: Demo, df: DataFrame
+) -> tuple[bool, str]:
+    """Collect ``df`` (demo ``d`` built on the tables ``con`` views) and
+    compare it with ``d.sql`` run in DuckDB: columns, row count,
+    order-insensitive values, then dtypes. Spark and DuckDB errors
+    propagate to the caller."""
+    spark_rows = df.collect()
+    if d.sql is None:
+        return True, f"rows-only ({len(spark_rows)} rows)"
+    rel = con.sql(d.sql)
+    duck_cols, duck_types = list(rel.columns), list(rel.types)
+    ok, msg = compare(spark_rows, df.columns, rel.fetchall(), duck_cols)
+    # the driver's value hash is dtype-sensitive (the r4 q_text_pack red
+    # row was a HUGEINT-vs-BIGINT slip with identical values), so a dtype
+    # mismatch is a hard failure here too
+    type_mismatches = type_report(df, duck_cols, duck_types)
+    if ok and type_mismatches:
+        return False, f"dtype mismatch: {'; '.join(type_mismatches)}"
+    return ok, msg
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -135,18 +160,13 @@ def main() -> int:
     from transit_efficiency_analysis_spark.demo import load_registry
     from transit_efficiency_analysis_spark.session import get_spark
 
+    registry = load_registry()
+    unknown = only - set(registry)
+    if unknown:
+        raise SystemExit(f"unknown demo(s): {sorted(unknown)}")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("verify_local")
     con = duck_connect(sf_dir)
-    registry = load_registry()
-    unknown_flags = {f for f in only if f.startswith("--") and f != "--window"}
-    if unknown_flags:
-        raise SystemExit(f"unknown flag(s): {sorted(unknown_flags)}")
-    if "--window" in only:
-        # mirror the driver's correctness window: first 50 registry entries.
-        # Composes with explicit demo names (union, not either/or).
-        only.discard("--window")
-        only |= set(list(registry)[:50])
 
     failures = []
     ran = 0
@@ -156,38 +176,12 @@ def main() -> int:
         ran += 1
         t0 = time.time()
         try:
-            df = d.fn(spark, sf_dir)
-            spark_rows = df.collect()
-            spark_cols = df.columns
+            ok, msg = check_demo(con, d, d.fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if d.sql is None:
-            print(f"pass {name}: rows-only ({len(spark_rows)} rows, {time.time()-t0:.1f}s)")
-            continue
-        try:
-            rel = con.sql(d.sql)
-            duck_cols = list(rel.columns)
-            duck_types = list(rel.types)
-            duck_rows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-        type_mismatches = list(type_report(df, duck_cols, duck_types))
-        for tm in type_mismatches:
-            print(f"  TYPE {name}: {tm}")
-        ok, msg = compare(spark_rows, spark_cols, duck_rows, duck_cols)
-        # the driver's value hash is dtype-sensitive (the r4 q_text_pack
-        # red row was a HUGEINT-vs-BIGINT slip with identical values), so
-        # a dtype mismatch is a hard failure here too
-        if ok and type_mismatches:
-            ok, msg = False, f"dtype mismatch: {'; '.join(type_mismatches)}"
-        status = "pass" if ok else "FAIL"
+            ok, msg = False, f"{type(e).__name__}: {e}"
         if not ok:
             failures.append(name)
-        print(f"{status} {name}: {msg} ({time.time()-t0:.1f}s)")
+        print(f"{'pass' if ok else 'FAIL'} {name}: {msg} ({time.time()-t0:.1f}s)")
 
     # denominator = demos actually run (a named subset reports subset/subset,
     # not subset-assumed/registry)

@@ -8,6 +8,12 @@ that DuckDB runs on the same parquet for the correctness gate.
 Register with the ``@demo`` decorator; ``__spark_entry__.py`` re-exports the
 registry. Column names are aliased identically on both sides (the driver's
 compare sorts columns by name before hashing).
+
+``tests/test_demo_oracle.py`` checks every registered demo on every tier-1
+run, one test id per demo: scalar output columns only, no row-at-a-time
+Python in the plan, and rows, columns and dtypes equal to its DuckDB
+oracle on the test tables (the compare lives in ``tools/verify_local.py``,
+which runs the same per-demo check from the command line).
 """
 
 from __future__ import annotations
@@ -64,125 +70,6 @@ _DEMO_MODULES = [
     "textops",
 ]
 
-# The driver oracle-checks the FIRST 50 registry entries each round, so
-# registry order IS the correctness window. Until round 4 the window was
-# steered by module order alone, which is fragile: demo modules import
-# each other, and a transitively-imported module registers its entries
-# first regardless of its position in _DEMO_MODULES. The window pins the
-# front 50 by name instead: _WINDOW_FRONT carries this round's fixes, new
-# demos, and anything whose implementation changed since its last green
-# row; _WINDOW_FILLER re-verifies prior-green rows, chosen
-# least-recently-verified first so coverage stays fresh.
-# tests/test_window.py asserts every filler name really has a prior green
-# CORRECTNESS row (guards the round-4 mislabel: q_text_pack was filed as
-# "r3-green filler" while actually new-and-red in r4).
-# Standing freshness SLO (adopted round 8, recalibrated round 11): no
-# registry entry's latest driver row may be older than one full rotation
-# cycle — ceil(len(REGISTRY) / 50) rounds (check_window computes it
-# live from the registry size; no literal count here, it drifted) —
-# and no entry may stay registered-but-never-driver-checked past the
-# round after it lands. (The original 4-round figure was set when the
-# registry was ~200 entries; past ~200 a 4-round cycle would need a
-# 60-slot window the driver doesn't have, so 4 was unachievable by
-# arithmetic, not negligence. The cycle-length form is the tightest
-# bound strict oldest-first rotation can actually deliver.)
-# Each round's window takes (1) never-checked entries first, (2) the
-# oldest driver rows next, (3) anything whose implementation or oracle
-# changed since its last green row. tools/check_window.py enforces all
-# of this mechanically (wired into pytest via tests/test_window.py) so a
-# skipped rotation can never ship silently again — the round-10 miss
-# shipped exactly because the rotation lived only in a comment.
-# The round this window targets (the round whose driver run will
-# execute it). tools/check_window.py uses it to tell "this window's
-# results were just recorded" (grace: newest artifact == window and
-# 50/50 green) from "rotation skipped" (artifacts newer than the
-# window's target round) — the ADVICE r11 medium item.
-_WINDOW_ROUND = 18
-
-# Round-18 window (docs/ROUND17.md §10 precomputed the arithmetic;
-# VERDICT r17 confirmed it against the artifacts: 47 forced r13-era
-# rows + 3 free slots). The 3 free slots:
-# - 1 NEW registry entry (VERDICT r17 ask #2): q_upsert_merge_retry —
-#   the round-17 CAS backend + merge_with_retry commit-retry story
-#   under the driver's hash check (check_window R1 forces any new
-#   demo into the window the round it lands).
-# - 2 pre-committed since ROUND17.md §1/§10: q_sim_lsh_topk_derived
-#   and q_sim_lsh_recall, the two r16-fresh LSH demos whose executed
-#   Python changed in round 17's auto flip (plans pinned
-#   expression-identical at gate scale; locally 6/6 green then) —
-#   the driver row is confirmation, not discovery.
-#
-# Dark-ship exemption (standing policy, ADVICE r13): an engine-side
-# branch shipped behind a non-default parameter whose default takes the
-# pre-change code path VERBATIM does NOT take a window slot the round
-# it lands; it takes one the round its DEFAULT flips (the oracle is
-# mirrored then too). Each exemption must be (a) named in ROUNDn.md,
-# (b) re-verified locally via tools/verify_local.py the round it lands,
-# and (c) scheduled for a real slot at its flip. No exemptions are
-# outstanding entering round 18.
-_WINDOW_FRONT = [
-    "q_upsert_merge_retry",
-    "q_sim_lsh_topk_derived",
-    "q_sim_lsh_recall",
-]
-
-# Prior-green re-verification filler, least-recently-verified first:
-# the 47 r13-era rows (latest green driver row CORRECTNESS_r13 —
-# exactly one rotation cycle old at round 18; check_window R3 lists
-# exactly this set, and docs/ROUND17.md §10 precomputed it — VERDICT
-# r17 re-derived the same 47 from the artifacts).
-_WINDOW_FILLER: list[str] = [
-    "q_agg_cube",
-    "q_agg_dashboard_weather",
-    "q_agg_listagg",
-    "q_agg_pivot",
-    "q_agg_rollup",
-    "q_agg_stats",
-    "q_approx_sketch_union",
-    "q_approx_top_k",
-    "q_arrow_udf_scalar",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_ngram_jaccard",
-    "q_distinct_agg",
-    "q_jdbc_roundtrip",
-    "q_join_asof",
-    "q_join_lateral_topk",
-    "q_map_in_arrow",
-    "q_multimodal_features",
-    "q_null_surface",
-    "q_observe_metrics",
-    "q_retrieval_rerank",
-    "q_semi_variant",
-    "q_semi_xml_parse",
-    "q_sim_bruteforce_topk",
-    "q_sink_compaction",
-    "q_sink_xml_roundtrip",
-    "q_sql_parameterized",
-    "q_sql_pipe_q1",
-    "q_sql_recursive_bfs",
-    "q_sql_table_udf",
-    "q_sql_udf",
-    "q_sql_unpivot",
-    "q_src_binary_files",
-    "q_src_python_datasource",
-    "q_stream_dedup_append",
-    "q_stream_sessionize_append",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_lm_score",
-    "q_text_quality",
-    "q_text_tokens",
-    "q_ts_epoch",
-    "q_ts_sub_min",
-    "q_upsert_merge_parquet",
-    "q_upsert_replay",
-    "q_window_pctrank",
-    "q_window_session_native",
-]
-
-_WINDOW = _WINDOW_FRONT + _WINDOW_FILLER
-
 
 def demo(name: str, sql: str | None = None):
     """Register a demo query under ``name`` with an optional DuckDB oracle."""
@@ -195,16 +82,8 @@ def demo(name: str, sql: str | None = None):
 
 
 def load_registry() -> dict[str, Demo]:
-    """Import all demo modules (idempotent) and return the registry,
-    ordered so the first 50 entries are exactly ``_WINDOW`` (the driver's
-    correctness window); the rest follow in module order."""
+    """Import all demo modules (idempotent) and return the registry in
+    registration (module import) order."""
     for mod in _DEMO_MODULES:
         importlib.import_module(f"transit_efficiency_analysis_spark.demo.{mod}")
-    missing = [n for n in _WINDOW if n not in REGISTRY]
-    assert len(_WINDOW) == 50 and not missing, (
-        f"_WINDOW must name 50 registered demos (len={len(_WINDOW)}, "
-        f"unknown={missing})"
-    )
-    ordered = {n: REGISTRY[n] for n in _WINDOW}
-    ordered.update((n, d) for n, d in REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(REGISTRY)

@@ -1,10 +1,7 @@
-"""Round-3 capability extras: two-phase connected components and the
-stop-shingle-capped contamination check.
-
-Registered after the driver's 50-row correctness window on purpose (the
-window is full of round-3's previously-unchecked demos); both are
-oracle-backed and verified by tools/verify_local.py, and can rotate into
-the window next round.
+"""Capability extras: two-phase connected components, the stop-shingle-
+capped contamination check, banded MinHash, TPC-H q4/q13, the as-of join
+with tolerance, SimHash/LSH near-dup variants, PageRank and triangle
+counts.
 """
 
 from __future__ import annotations

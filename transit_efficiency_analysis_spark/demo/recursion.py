@@ -1,37 +1,36 @@
-"""Recursive-CTE demos (``WITH RECURSIVE`` — iterative plans, Spark 4.1).
+"""Recursive-CTE demos: ``WITH RECURSIVE`` oracles, iterative executed forms.
 
 Recursion is the one relational control-flow shape the rest of the
 registry expresses imperatively (the pagerank/connected-components loops
 in ``operators/graph.py`` / ``operators/dedup.py`` drive their fixpoints
-from Python). Spark 4.1 executes ``WITH RECURSIVE`` natively — the
-anchor seeds an iteration, each step joins the previous step's delta
-against a (static, reusable) work table, and the engine unions the
-per-level results. Two contracts, each oracle-checked against DuckDB's
-own recursive evaluator running the IDENTICAL query:
+from Python). Each demo here declares its contract as a ``WITH
+RECURSIVE`` query, and the oracle is DuckDB's own recursive evaluator
+running that query verbatim. Neither executed form uses Spark's native
+``WITH RECURSIVE`` (UnionLoop) any more: since round 19 both run as
+composed DataFrame plans, because UnionLoop paid a re-plan and a
+separate job per recursion level.
 
 - ``q_sql_recursive_chain`` — linked-list traversal: walk each
   customer's order chain (successor edges derived with ``lead()``)
-  accumulating position and cumulative spend. This is the workload
-  windows cannot express when the successor edge is an arbitrary
-  pointer rather than a sort order; deriving the edges WITH a window
-  and then walking them recursively proves both halves agree.
+  accumulating position and cumulative spend. The oracle recurses along
+  the successor pointer, one level per order. Spark runs prefix doubling
+  (pointer jumping): ceil(log2(max chain length)) rounds of ``lag()``
+  windows over the chain rank, all on one exchange in one job, written
+  through ``_tmpcache.lazy_result``.
 - ``q_sql_recursive_bfs`` — bounded BFS over a cyclic graph (the
-  event-type transition digraph): Spark recursion supports UNION ALL
-  only (UNION-distinct is rejected by the analyzer:
-  UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so cycles are cut with an
-  explicit hop cap and min-hop aggregation — the standard UNION ALL
-  reachability idiom. The oracle runs the same capped recursion, so
-  the comparison is exact regardless of graph diameter.
+  event-type transition digraph). The oracle is the cycle-safe UNION ALL
+  idiom: an explicit hop cap of 4 and min-hop aggregation (Spark's
+  analyzer rejects UNION-distinct recursion with
+  UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE). Spark materializes the edge
+  digraph once, unrolls the five capped levels into one plan (level k+1
+  = level k joined with the edges), UNION ALLs them and aggregates
+  ``min(hop)`` in one job — level for level what the recursion computes.
 
-Scale: each recursion level is one distributed join of the previous
-level's frontier against the (small, broadcastable) edge/successor
-table; depth — not data size — bounds the iteration count. The chain
-walk's depth is max orders per customer (~25 at sf0.01, ~double per
-10x; ``spark.sql.cteRecursionLevelLimit`` is raised to 1000 in-demo,
-and at true 100 TB scale a chain walk this deep would be re-expressed
-per-partition or via the window form the oracle proves equivalent).
-Spark guards runaway recursion with cteRecursionLevelLimit /
-cteRecursionRowLimit rather than silently spilling unbounded state.
+Scale: the chain walk is one shuffle by customer plus log2(depth)
+stacked windows over that partitioning, so deeper chains add window
+passes, not jobs. The unrolled BFS plan grows with the square of the hop
+cap (level k repeats the k joins before it), which is small at the
+literal cap of 4; its frontier is bounded by the event-type vocabulary.
 """
 
 from __future__ import annotations
@@ -97,15 +96,11 @@ def q_sql_recursive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch must keep the anchor's schema, and unchecked decimal
     addition widens precision per step). Rows out = rows in (every
     order appears at exactly one level), so the driver hash checks the
-    whole traversal. Depth = max chain length; level limit raised
-    explicitly rather than inherited (fail loudly over silently
-    half-walking) — and SCOPED to this query: the limit is a live
-    session conf read at execution time, so the recursion is executed
-    eagerly inside a try/finally that restores the prior value, leaving
-    the session's runaway-recursion guard exactly as it was for every
-    later query (tests/test_round8_fixes.py::
+    whole traversal. The executed walk runs no recursion, so it leaves
+    the session's ``spark.sql.cteRecursionLevelLimit`` untouched
+    (tests/test_round8_fixes.py::
     test_recursive_chain_demo_restores_conf asserts before == after).
-    The eagerness point is a distributed parquet rewrite into a
+    The result is written eagerly, as a distributed parquet rewrite into a
     process-lifetime result dir (``_tmpcache.lazy_result``), not
     ``localCheckpoint`` — a checkpoint would pin the traversal's blocks
     in executor storage for the session's lifetime and lose them on

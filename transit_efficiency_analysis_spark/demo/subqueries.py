@@ -1,9 +1,6 @@
 """Subquery demos (scalar / EXISTS / correlated-average shapes).
 
-Split out of ``demo.sqlsurface`` so module ordering can place these
-r3-green, unchanged demos behind the driver's 50-row correctness window
-(their rows are on record in CORRECTNESS_r03.json) while the changed
-SQL-surface demos stay inside it.
+Split out of ``demo.sqlsurface``.
 """
 
 from __future__ import annotations

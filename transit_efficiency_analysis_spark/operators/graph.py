@@ -80,7 +80,12 @@ def pagerank_ppm(
     sums are bounded by n_nodes * PPM and the damping product by
     ~n_nodes * PPM * damping_ppm (overflow at ~10^13 nodes).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # a NULL-src edge never joins a rank row (src = node_id), so it must
+    # not count toward outdeg or the node set either — the first
+    # iteration skips the rank join and would otherwise credit its dst
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
+        F.col("src").isNotNull()
+    )
     nodes = (
         e.select(F.col("src").alias("node_id"))
         .unionByName(e.select(F.col("dst").alias("node_id")))

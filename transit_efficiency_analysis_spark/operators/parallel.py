@@ -21,6 +21,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _has_exchange(node) -> bool:
+    """True when the JVM plan tree under ``node`` holds a shuffle,
+    broadcast or reused exchange (a node class ending in ``ExchangeExec``).
+
+    Besides ``children`` the walk follows the plans a node's tree string
+    prints without listing them as children: ``innerChildren`` (a cached
+    relation's plan, subqueries), an adaptive plan's current plan and a
+    query stage's plan. Matching node classes rather than the plan string
+    keeps a column or path named like ``Exchange_rate`` from reading as
+    an exchange.
+    """
+    name = node.getClass().getSimpleName()
+    if name.endswith("ExchangeExec"):
+        return True
+    if name == "AdaptiveSparkPlanExec":
+        return _has_exchange(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _has_exchange(node.plan())
+    return any(
+        _has_exchange(seq.apply(i))
+        for seq in (node.children(), node.innerChildren())
+        for i in range(seq.size())
+    )
+
+
 def _scan_partitions(df: DataFrame) -> int | None:
     """Partition count of ``df``'s plan, probed WITHOUT executing jobs.
 
@@ -37,8 +62,7 @@ def _scan_partitions(df: DataFrame) -> int | None:
     ``sparkPlan`` here is the pre-adaptive physical plan, computed
     driver-side with no job submission.
     """
-    plan = df._jdf.queryExecution().sparkPlan().toString()
-    if "Exchange" in plan:
+    if _has_exchange(df._jdf.queryExecution().sparkPlan()):
         return None
     return df.rdd.getNumPartitions()
 
